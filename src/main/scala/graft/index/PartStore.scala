@@ -24,11 +24,11 @@ import graft.{PostingSeg, PostingSegP}
   * The format is a straight length-prefixed dump of the segment fields (the
   * engine's own delta+varbyte codec output plus block-max metadata) — no
   * parquet machinery is available inside a task, and these files are
-  * TRANSIENT: a publish pass converts them to the final (term,shard)-sorted
-  * postings.parquet and deletes them. Hash-partitioned layout means each
-  * partition id always receives exactly the same (term, shard) groups across
-  * attempts, so parts written by different attempts compose into one
-  * consistent index.
+  * TRANSIENT: a publish pass converts them to the final shard-bucketed
+  * postings.parquet (part pid becomes bucket pid) and deletes them. The
+  * postings exchange hash-partitions on shard, so each partition id always
+  * receives exactly the same shards across attempts, and parts written by
+  * different attempts compose into one consistent index.
   */
 object PartStore {
 
@@ -41,7 +41,7 @@ object PartStore {
   private def fs(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
 
   /** Pin the partitioning scheme of a parts dir. The reduce partition
-    * count P decides which (term, shard) groups hash into which part, so
+    * count P decides which shards hash into which part, so
     * parts written under two different P values (or positional-ness) must
     * NEVER compose — a resume with a changed spark.sql.shuffle.partitions
     * would otherwise pass the completeness check while duplicating every

@@ -751,8 +751,9 @@ object BoolQuery {
     * pointwise MAX equals `upperBound` for every leaf-ceiling assignment
     * (up to float reorder — callers inflate exactly as for [[boundWeights]]),
     * or None when the set would exceed [[MaxBoundForms]] (deep DisMax
-    * nesting) or the tree holds unexpanded multi-term leaves. A DisMax-free
-    * tree yields the singleton [[boundWeights]] form.
+    * nesting). Like [[boundWeights]] it throws IllegalStateException on
+    * unexpanded Wild/Fuzzy leaves — callers rewrite the tree first. A
+    * DisMax-free tree yields the singleton [[boundWeights]] form.
     */
   def boundWeightsMax(q: BoolQ): Option[Vector[(Map[String, Double], Double)]] = {
     type Form = (Map[String, Double], Double)

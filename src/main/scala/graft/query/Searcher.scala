@@ -2,7 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -17,13 +17,20 @@ import graft.index.{Codec, IndexBuilder, IndexMeta, Tokenize}
   * here as galloping intersection of delta-compressed posting lists inside
   * `mapGroups` over a Catalyst-planned, predicate-pushed parquet scan. Shards
   * are docId ranges, so all of a shard's lists are co-grouped and the
-  * intersection is embarrassingly parallel across shards with no posting
-  * re-shuffle of anything but the query's own (filtered) segments.
+  * intersection is embarrassingly parallel across shards. On a
+  * shard-bucketed index the co-grouping happens where the scan reads each
+  * bucket file — no posting re-shuffle at all; otherwise only the query's
+  * own (filtered) segments are re-shuffled.
   *
   * Block-max pruning: each 128-posting block carries an admissible upper
   * bound of the BM25 tf-normalization; a candidate is scored only if
   * Σ_t idf_t·(k1+1)·blockMax_t can still beat the current k-th score —
   * the WAND/BMW idea applied to the conjunctive traversal.
+  *
+  * Lifecycle: open ONE Searcher per served index and reuse it for every
+  * query — it owns the driver-side term cache and the executor-side norms
+  * broadcast. Call [[close]] when the index is retired (e.g. replaced by a
+  * compaction) to release the broadcast.
   */
 class Searcher(spark: SparkSession, indexDir: String,
                deltaDirs: Seq[String] = Nil,
@@ -72,8 +79,17 @@ class Searcher(spark: SparkSession, indexDir: String,
     require(posByDir.map(_._2).distinct.size == 1,
       s"base and delta indexes disagree on positional-ness: $posByDir")
   }
+  /** The posting segments. A single-dir index published shard-bucketed
+    * (meta.json carries its bucket count) opens with its BucketSpec, so
+    * [[cogroupLens]] groups the scan by shard where it reads it — no
+    * exchange — and `shard IN (...)` prunes whole bucket files. Base+delta
+    * unions and unbucketed indexes read as plain parquet; Catalyst then
+    * inserts the shard exchange itself.
+    */
   private val postings =
-    spark.read.parquet(allDirs.map(d => s"$d/postings.parquet"): _*)
+    if (deltaDirs.isEmpty && baseMeta.buckets > 0)
+      IndexBuilder.openBucketed(spark, s"$indexDir/postings.parquet", baseMeta.buckets)
+    else spark.read.parquet(allDirs.map(d => s"$d/postings.parquet"): _*)
   private val dlens = spark.read.parquet(allDirs.map(d => s"$d/dlens.parquet"): _*)
   private lazy val docs = spark.read.parquet(allDirs.map(d => s"$d/docs.parquet"): _*)
   private lazy val dict = spark.read.parquet(allDirs.map(d => s"$d/dict.parquet"): _*)
@@ -101,35 +117,70 @@ class Searcher(spark: SparkSession, indexDir: String,
     * so the cache can never serve stale lengths.
     */
   private val DlensCacheMaxBytes = 64L << 20
+  @volatile private var dlensCacheLoaded = false
+  @volatile private var closed = false
   private lazy val dlensCacheBc
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] =
     if (meta.numDocs * 4L > DlensCacheMaxBytes) None
     else {
       val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
         .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
-      Some(spark.sparkContext.broadcast(merged))
+      val bc = spark.sparkContext.broadcast(merged)
+      dlensCacheLoaded = true
+      Some(bc)
     }
 
-  /** Per-shard scoring harness shared by every query path: group the
-    * fetched segments by shard and hand each shard's segments plus its
-    * dlens row(s) to `f` — via the broadcast norms cache (one grouped
-    * input) when it fits, else via the cogroup against the pruned dlens
-    * scan. `f` keeps the historical cogroup signature (the lens iterator
-    * carries 0..n partial rows; callers mergeLens) so both plans run the
-    * IDENTICAL shard kernel.
+  /** The norms broadcast, if a query has loaded it (test hook). */
+  private[graft] def normsBroadcast
+      : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] =
+    if (dlensCacheLoaded) dlensCacheBc else None
+
+  /** Release what this Searcher broadcast: destroys the norms cache (up to
+    * 64 MB on every executor) instead of waiting for the ContextCleaner to
+    * collect it. Idempotent; a closed Searcher refuses further scoring
+    * queries.
     */
-  private def cogroupLens[S, T: org.apache.spark.sql.Encoder](
-      segs: Dataset[S], candShards: Seq[Int])(shardOf: S => Int)(
-      f: (Int, Iterator[S], Iterator[ShardLens]) => Iterator[T]): Dataset[T] =
+  def close(): Unit = synchronized {
+    if (!closed) {
+      closed = true
+      normsBroadcast.foreach(_.destroy())
+    }
+  }
+
+  /** Per-shard scoring harness shared by every query path: add the
+    * tombstone exclusion segments ([[withExclusions]]), group the fetched
+    * segments by their `shard` column and hand each shard's segments plus
+    * its dlens row(s) to `f` — via the broadcast norms cache
+    * (one grouped input) when it fits, else via the cogroup against the
+    * pruned dlens scan. `f` keeps the historical cogroup signature (the
+    * lens iterator carries 0..n partial rows; callers mergeLens) so both
+    * plans run the IDENTICAL shard kernel.
+    *
+    * Grouping by the column (not an opaque key function) lets Catalyst see
+    * that a bucketed postings scan is already clustered by shard: the plan
+    * is bucketed scan → local sort → MapGroups, with no exchange. Any input
+    * whose clustering is unknown (deltas, tombstone or filter segments
+    * unioned in, an unbucketed index) gets the exchange inserted instead.
+    * Only the encoder's columns are kept, so a positional index's
+    * `posBytes` is not read by the non-positional kernels.
+    */
+  private def cogroupLens[S: Encoder, T: Encoder](
+      segs: Dataset[S], candShards: Seq[Int])(
+      f: (Int, Iterator[S], Iterator[ShardLens]) => Iterator[T]): Dataset[T] = {
+    require(!closed, "Searcher is closed")
+    val byShard = withExclusions(segs.toDF(), candShards)
+      .select(implicitly[Encoder[S]].schema.fieldNames.toSeq.map(col): _*)
+      .groupBy($"shard").as[Int, S]
     dlensCacheBc match {
       case Some(bc) =>
-        segs.groupByKey(shardOf).flatMapGroups { (shard: Int, it: Iterator[S]) =>
+        byShard.flatMapGroups { (shard: Int, it: Iterator[S]) =>
           f(shard, it, bc.value.get(shard).iterator)
         }
       case None =>
         val lensC = dlens.filter($"shard".isin(candShards: _*)).as[ShardLens]
-        segs.groupByKey(shardOf).cogroup(lensC.groupByKey(_.shard))(f)
+        byShard.cogroup(lensC.groupBy($"shard").as[Int, ShardLens])(f)
     }
+  }
 
   /** Tombstoned (deleted) docs — parquet of (docId, shard) written by
     * `Tombstones.applyDeletes`. Lucene deletion semantics: deleted docs are
@@ -143,23 +194,26 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   private lazy val tombstoneDf = tombstones.map(p => spark.read.parquet(p))
 
-  /** One exclusion segment per candidate shard, carrying the shard's sorted
-    * deleted docIds through the cogroup under [[Searcher.DeletedTerm]].
+  /** `segs` plus one exclusion segment per candidate shard, carrying the
+    * shard's sorted deleted docIds through the cogroup under
+    * [[Searcher.DeletedTerm]] (null `posBytes` on a positional index);
+    * `segs` itself when there are no tombstones.
     */
-  private def exclusionSegs(candShards: Seq[Int]): Dataset[PostingSeg] =
+  private def withExclusions(segs: DataFrame, candShards: Seq[Int]): DataFrame =
     tombstoneDf match {
-      case None => spark.emptyDataset[PostingSeg]
+      case None => segs
       case Some(ts) =>
         // r6: runs are packed per scan partition after a LOCAL sort — no
         // groupByKey exchange. A shard split across partitions yields
         // several partial runs; [[Searcher.decodeDeleted]] merges arbitrary
         // partials (distinct + sort), so correctness is unconditional.
-        ts.filter($"shard".isin(candShards: _*))
+        segs.unionByName(ts.filter($"shard".isin(candShards: _*))
           .select($"docId", $"shard")
           .sortWithinPartitions($"shard", $"docId")
           .as[(Long, Int)]
           .mapPartitions(it =>
             Searcher.packRuns(Searcher.DeletedTerm, it, sumTfPerId = false))
+          .toDF(), allowMissingColumns = true)
     }
 
   /** Driver-side term metadata cache: df (global, summed over base+deltas)
@@ -256,12 +310,11 @@ class Searcher(spark: SparkSession, indexDir: String,
       terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
     if (candShards.isEmpty) return spark.emptyDataset[Hit]
 
-    // `term IN (...) AND shard IN (...)` both reach the parquet scan (row
-    // groups are (term, shard)-sorted by the publish stage), so only the
-    // query's posting segments in candidate shards are read.
+    // `term IN (...) AND shard IN (...)` both reach the parquet scan:
+    // `shard IN` selects the bucket files, `term IN` prunes row groups
+    // inside each (term, shard)-sorted file.
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
 
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val termsSorted = terms
@@ -269,7 +322,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val reB = needReBound
     val cursor = after
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -322,14 +375,13 @@ class Searcher(spark: SparkSession, indexDir: String,
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
       .unionByName(negSegs, allowMissingColumns = true)
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
 
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val termsSorted = terms
     val pruning = usePruning
     val reB = needReBound
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -388,7 +440,6 @@ class Searcher(spark: SparkSession, indexDir: String,
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
       .unionByName(filterSegs, allowMissingColumns = true)
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
 
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     // FilterTerm (leading space) sorts before every real token, preserving the
@@ -397,7 +448,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val pruning = usePruning
     val reB = needReBound
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -486,12 +537,10 @@ class Searcher(spark: SparkSession, indexDir: String,
     val fetchTerms = (terms :+ ex).distinct
     val segsC = postings.filter($"term".isin(fetchTerms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (seqB, termsB, exB, preB, postB) = (tokenSeq, terms, ex, pre, post)
     val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -526,12 +575,10 @@ class Searcher(spark: SparkSession, indexDir: String,
     if (candShards.isEmpty) return spark.emptyDataset[Hit]
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (seqB, termsB, endB) = (tokenSeq, terms, maxEnd)
     val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -585,12 +632,10 @@ class Searcher(spark: SparkSession, indexDir: String,
     val liveTerms = liveSlots.flatten.distinct.sorted
     val segsC = postings.filter($"term".isin(liveTerms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val slotSeqB = slotKeys.zip(liveSlots)
     val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -669,8 +714,6 @@ class Searcher(spark: SparkSession, indexDir: String,
     if (candShards.isEmpty) return spark.emptyDataset[Hit]
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (termsB, winB) = (terms, window)
     // ordered mode: the query's token slots as indices into termsB — the
@@ -678,7 +721,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val slotsB: Array[Int] =
       if (ordered) seq.map(t => termsB.indexOf(t)).toArray else null
     val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -763,7 +806,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * [[expandFuzzy]]). None = the tree simplified to match-none (every
     * expansion came back empty where a match needed one).
     */
-  def rewriteBoolTree(tree: BoolQ, maxExpand: Int = 64): Option[BoolQ] =
+  def rewriteBoolTree(tree: BoolQ, maxExpand: Int = Searcher.DefaultMaxExpand): Option[BoolQ] =
     BoolQuery.rewriteMultiTerm(tree,
       p => expandWildcard(p, maxExpand),
       (t, e) => expandFuzzy(t, e, 0, maxExpand))
@@ -806,13 +849,12 @@ class Searcher(spark: SparkSession, indexDir: String,
 
     val segsC = postings.filter($"term".isin(live: _*) &&
       $"shard".isin(candShards: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val liveSorted = live
     val pruning = usePruning
     val reB = needReBound
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -846,12 +888,10 @@ class Searcher(spark: SparkSession, indexDir: String,
         "(IndexConfig(positions = true))")
     val segsC = postings.filter($"term".isin(live: _*) &&
       $"shard".isin(candShards: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (treeB, liveB, reqB, idfB) = (tree, live, required, idfByTerm)
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segsC, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -878,7 +918,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * query rewrite (Lucene's PrefixQuery → rewritten BooleanQuery), riding
     * the same WAND-pruned document-at-a-time kernel as `searchOr`.
     */
-  def searchPrefix(prefix: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchPrefix(prefix: String, k: Int,
+                   maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandPrefix(prefix, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -900,7 +941,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * full scan of the (narrow, 3-column, distributed) dictionary — never
     * collected beyond the capped expansion.
     */
-  def searchRegex(pattern: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchRegex(pattern: String, k: Int,
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandRegex(pattern, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -919,7 +961,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * rides the WAND-pruned OR kernel. A glob with no wildcard degenerates
     * to an exact-term query.
     */
-  def searchWildcard(glob: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchWildcard(glob: String, k: Int,
+                     maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandWildcard(glob, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -929,7 +972,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * matches of the translated regex, ordered (df desc, term asc), capped
     * at `maxExpand`.
     */
-  def expandWildcard(glob: String, maxExpand: Int = 64): Seq[String] =
+  def expandWildcard(glob: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] =
     expandRegex(Searcher.globToRegex(glob), maxExpand)
 
   /** Term range query (Lucene TermRangeQuery analog, the classic-parser
@@ -947,7 +990,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   def searchTermRange(lo: Option[String], hi: Option[String], k: Int,
                       includeLo: Boolean = true, includeHi: Boolean = true,
-                      maxExpand: Int = 64): Dataset[Hit] = {
+                      maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandTermRange(lo, hi, includeLo, includeHi, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -958,7 +1001,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   def expandTermRange(lo: Option[String], hi: Option[String],
                       includeLo: Boolean = true, includeHi: Boolean = true,
-                      maxExpand: Int = 64): Seq[String] = {
+                      maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     require(lo.nonEmpty || hi.nonEmpty,
       "term range needs at least one bound (both open = match-all)")
     val l = lo.map(_.toLowerCase)
@@ -977,7 +1020,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** The dictionary expansion of a regex: full-term matches ordered by
     * (df desc, term asc), capped at `maxExpand`.
     */
-  def expandRegex(pattern: String, maxExpand: Int = 64): Seq[String] = {
+  def expandRegex(pattern: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     java.util.regex.Pattern.compile(pattern) // fail fast on driver, not in tasks
     val lit = Searcher.literalPrefix(pattern)
     val base =
@@ -1007,8 +1050,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * full scan of the narrow 3-column distributed dictionary — never
     * collected beyond the capped expansion.
     */
-  def searchFuzzy(term: String, k: Int, maxEdits: Int = 1,
-                  prefixLength: Int = 0, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, prefixLength: Int = 0,
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandFuzzy(term, maxEdits, prefixLength, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -1020,7 +1063,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * `maxExpand`.
     */
   def expandFuzzy(term: String, maxEdits: Int = 1, prefixLength: Int = 0,
-                  maxExpand: Int = 64): Seq[String] = {
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     val norm = Tokenize.tokenize(term)
     require(norm.length == 1,
       s"fuzzy query must normalize to one token, got ${norm.toSeq} from '$term'")
@@ -1105,7 +1148,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * through the tokenizer (so `UTIL_` and `util_` expand identically) and
     * must normalize to exactly one token.
     */
-  def expandPrefix(prefix: String, maxExpand: Int = 64): Seq[String] = {
+  def expandPrefix(prefix: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     val norm = Tokenize.tokenize(prefix)
     require(norm.length == 1,
       s"prefix must normalize to one token, got ${norm.toSeq} from '$prefix'")
@@ -1560,12 +1603,11 @@ class Searcher(spark: SparkSession, indexDir: String,
     val candShards = present.flatMap(t => info(t).shards).distinct.sorted
     val segs = postings.filter($"term".isin(present: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
     val pruning = usePruning
     val reB = needReBound
-    val hits = cogroupLens(segs, candShards.toSeq)(_.shard) {
+    val hits = cogroupLens(segs, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -1622,12 +1664,11 @@ class Searcher(spark: SparkSession, indexDir: String,
         .toDF("query_name", "docId", "score", "rank")
     val segs = postings.filter($"term".isin(liveTerms: _*) &&
       $"shard".isin(candShards: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val conj = conjunctive
     val pruningB = usePruning
     val reB = needReBound
-    val perShard = cogroupLens(segs, candShards.toSeq)(_.shard) {
+    val perShard = cogroupLens(segs, candShards.toSeq) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
