@@ -35,20 +35,36 @@ object Tokenize {
   def termsCol(content: Column): Column =
     regexp_extract_all(lower(content), lit(TokenPattern), lit(0))
 
-  @inline private def isTokChar(c: Char): Boolean =
+  /** The token char class [A-Za-z0-9_] over ASCII input — the one
+    * definition shared by `tokenize` and the build's draft encoder
+    * (IndexBuilder.draftSegments), so the two cannot drift apart.
+    */
+  @inline private[graft] def isTokChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
       (c >= 'A' && c <= 'Z') || c == '_'
+
+  /** ASCII lowercasing: 1:1 and never moves a char across the class. */
+  @inline private[graft] def lowerAscii(c: Char): Char =
+    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** The fast-path gate: every char < 0x80. Any other char sends the WHOLE
+    * string to the regex definition of record.
+    */
+  private[graft] def isAscii(s: String): Boolean = {
+    val n = s.length
+    var i = 0
+    while (i < n && s.charAt(i) < 0x80) i += 1
+    i == n
+  }
 
   /** JVM-side twin — must match `termsCol` exactly. ASCII fast path (run
     * scanner, no regex); non-ASCII input falls back to the regex definition.
     */
   def tokenize(s: String): Array[String] = {
+    if (!isAscii(s)) return tokenizeRegex(s)
     val n = s.length
-    var i = 0
-    while (i < n && s.charAt(i) < 0x80) i += 1
-    if (i < n) return tokenizeRegex(s)
     val out = Array.newBuilder[String]
-    i = 0
+    var i = 0
     while (i < n) {
       if (isTokChar(s.charAt(i))) {
         val start = i
@@ -57,11 +73,7 @@ object Tokenize {
         val len = i - start
         val buf = new Array[Char](len)
         var j = 0
-        while (j < len) {
-          val c = s.charAt(start + j)
-          buf(j) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-          j += 1
-        }
+        while (j < len) { buf(j) = lowerAscii(s.charAt(start + j)); j += 1 }
         out += new String(buf)
       } else i += 1
     }
@@ -98,9 +110,7 @@ object Tokenize {
     while (i < n) {
       val b = s.getByte(i)
       if (b < 0) return tokenizeRegex(s.toString).length
-      val tok = (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-        (b >= '0' && b <= '9') || b == '_'
-      if (tok) { if (!in) { cnt += 1; in = true } } else in = false
+      if (isTokChar(b.toChar)) { if (!in) { cnt += 1; in = true } } else in = false
       i += 1
     }
     cnt

@@ -23,7 +23,7 @@ import graft.index.{Codec, IndexBuilder, IndexConfig, Metrics, Tokenize}
   *  - each batch directory is committed by its meta.json (written last);
   *    a restart recomputes the next docId from committed batches only and
   *    overwrites any uncommitted partial batch — idempotent resume, the
-  *    streaming twin of the staged build's stage markers
+  *    streaming twin of the batch build's `_stage_<name>.json` markers
   */
 object IncrementalIndexer {
 
@@ -75,16 +75,7 @@ object IncrementalIndexer {
     val totalTokens = withId.agg(sum($"dlen".cast("long"))).as[Long].head()
     val globalEnd = firstDocId + numDocs
 
-    withId.select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
-      .as[(Long, Int, Int)]
-      .groupByKey(_._3)
-      .mapGroups { (shard, it) =>
-        val first = shard.toLong * dps
-        val sz = (math.min((shard + 1).toLong * dps, globalEnd) - first).toInt
-        val lens = new Array[Int](sz)
-        it.foreach { case (d, dl, _) => lens((d - first).toInt) = dl }
-        ShardLens(shard, first, lens)
-      }
+    IndexBuilder.packDlens(withId, dps, globalEnd)
       .write.mode("overwrite").parquet(s"$batchDir/dlens.parquet")
 
     val (k1, b) = (cfg.k1, cfg.b)

